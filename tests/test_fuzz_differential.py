@@ -1016,8 +1016,67 @@ def _rshape_subquery_range(rng, start, end, step):
     return f"{fn}({sel}[{w}s:{ss}s]{off})", sql
 
 
+_PAIR_SQL = {  # per-window value over lag rows l(value, pv, ts, pts, rn)
+    "irate": ("CASE WHEN value >= pv THEN value - pv ELSE value END"
+              " / ((ts - pts) / 1000.0)"),
+    "idelta": "value - pv",
+    "resets": "value < pv",
+    "changes": "value <> pv",
+}
+
+
+def _rshape_pair_mod(rng, start, end, step):
+    """irate/idelta/resets/changes over a matrix selector or a subquery
+    with offset/@ — the functions that read each sample's predecessor in
+    the window.  The oracle walks the window rows with lag()."""
+    metric = rng.choice(METRICS)
+    pm, sqlp = rng.choice(MATCHERS)
+    sel = f"{metric}{{{pm}}}" if pm else metric
+    fn = rng.choice(sorted(_PAIR_SQL))
+    mod, te = _mod_window(rng)
+    if rng.random() < 0.5:
+        w = rng.choice(WINDOWS)
+        promql = f"{fn}({sel}[{w}s]{mod})"
+        rows = f"""
+        SELECT g.t, s.job, s.inst, s.ts, s.value
+        FROM ({_grid_sql(start, end, step)}) g
+        JOIN samples s ON s.ts > ({te}) - {w * 1000} AND s.ts <= ({te})
+        WHERE s.name = '{metric}' AND {sqlp}"""
+    else:
+        # inner steps are absolute multiples of ss; a superset of every
+        # window's points is enough, the window join picks them
+        w = rng.choice([60, 100, 120])
+        ss = rng.choice([5, 15, 30])
+        promql = f"{fn}({sel}[{w}s:{ss}s]{mod})"
+        rows = f"""
+        SELECT g.t, ip.job, ip.inst, ip.it AS ts, ip.value
+        FROM ({_grid_sql(start, end, step)}) g
+        JOIN (SELECT ig.it, s.job, s.inst, arg_max(s.value, s.ts) AS value
+              FROM (SELECT unnest(generate_series(0, 200000, {ss * 1000}))
+                    AS it) ig
+              JOIN samples s ON s.ts > ig.it - {LOOKBACK} AND s.ts <= ig.it
+              WHERE s.name = '{metric}' AND {sqlp}
+              GROUP BY ig.it, s.job, s.inst) ip
+          ON ip.it > ({te}) - {w * 1000} AND ip.it <= ({te})"""
+    lag = f"""
+    SELECT t, job, inst, ts, value,
+           lag(value) OVER (PARTITION BY t, job, inst ORDER BY ts) AS pv,
+           lag(ts) OVER (PARTITION BY t, job, inst ORDER BY ts) AS pts,
+           row_number() OVER (PARTITION BY t, job, inst ORDER BY ts DESC)
+             AS rn
+    FROM ({rows})"""
+    if fn in ("irate", "idelta"):
+        sql = (f"SELECT t, job, inst, {_PAIR_SQL[fn]} AS v FROM ({lag}) "
+               f"WHERE rn = 1 AND pv IS NOT NULL")
+    else:
+        sql = (f"SELECT t, job, inst, CAST(sum(CASE WHEN {_PAIR_SQL[fn]} "
+               f"THEN 1 ELSE 0 END) AS DOUBLE) AS v FROM ({lag}) "
+               f"GROUP BY t, job, inst")
+    return promql, sql
+
+
 MOD_RSHAPES = [_rshape_selector_mod, _rshape_over_time_mod,
-               _rshape_rate_mod, _rshape_subquery_range]
+               _rshape_rate_mod, _rshape_subquery_range, _rshape_pair_mod]
 N_MODIFIER_QUERIES = int(os.environ.get("FUZZ_N_MODIFIER", "80"))
 
 
@@ -1066,7 +1125,9 @@ def test_differential_fuzz_range(corpus):
 def test_differential_fuzz_range_modifiers(corpus):
     """offset/@/subquery randomized range differential — the axis where
     the r9 (@-anchor extrapolation) and r10 (@-in-subquery grid) bugs
-    lived, previously covered only by hand-built corpus files."""
+    lived, previously covered only by hand-built corpus files.  Includes
+    the predecessor-reading functions (irate/idelta/resets/changes), whose
+    lag columns @ windows build on the window rows."""
     eng, con = corpus
     rng = random.Random(909090)
     failures = []

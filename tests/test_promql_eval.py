@@ -705,12 +705,14 @@ def _plan_str(df) -> str:
 
 def test_production_native_range_functions_agree(spark):
     """r12: in production mode (deterministic=False) the order-insensitive
-    *_over_time folds, the rate family (via pre-explode lag) and
+    *_over_time functions, the rate family (via pre-explode lag) and
     resets/changes compile to native aggregations.  Differential pin: the
-    native twins must agree with the deterministic folds on a corpus with
-    counter resets, NaN runs, ±Inf, off-grid/sparse series and
-    single-sample windows — and the production plans must actually BE
-    native (no collect_list fold, no SortAggregate)."""
+    production results must agree with the deterministic engine (order-
+    stable folds where native float sums reassociate, the same native
+    aggregation for exact functions) on a corpus with counter resets, NaN
+    runs, ±Inf, off-grid/sparse series and single-sample windows — and the
+    plans must actually BE native (no collect_list fold, no
+    SortAggregate)."""
     from thanos_parquet_gateway_spark.promql import PromQLEngine
     inf, nan = float("inf"), float("nan")
     rows = (
@@ -728,12 +730,18 @@ def test_production_native_range_functions_agree(spark):
     exact = {"count_over_time", "min_over_time", "max_over_time",
              "first_over_time", "last_over_time", "present_over_time",
              "ts_of_first_over_time", "ts_of_last_over_time",
-             "resets", "changes"}
+             "irate", "idelta", "resets", "changes"}
     over_time = ["count_over_time", "sum_over_time", "avg_over_time",
                  "min_over_time", "max_over_time", "first_over_time",
                  "last_over_time", "present_over_time", "stddev_over_time",
                  "stdvar_over_time", "ts_of_first_over_time",
                  "ts_of_last_over_time"]
+    # @-anchored matrix and subquery windows carry prev too (lag on the
+    # window rows, shifted into the step frame like ts)
+    at_forms = [f"{fn}({rv} @ 60)"
+                for fn in ("irate", "idelta", "resets", "changes",
+                           "count_over_time")
+                for rv in ("c[30s]", "c[40s:10s]")]
     queries = ([f"{fn}(g[30s])" for fn in over_time] +
                ["rate(c[30s])", "increase(c[30s])", "delta(c[30s])",
                 "irate(c[30s])", "idelta(c[30s])",
@@ -749,9 +757,8 @@ def test_production_native_range_functions_agree(spark):
                 "delta(g[40s:10s])", "irate(c[40s:10s])",
                 "idelta(c[40s:10s])", "resets(c[40s:10s])",
                 "changes(c[40s:10s])", "rate(c[35s:10s] offset 10s)",
-                # fold fallback in production mode (prev unavailable):
-                # @-anchored windows
-                "sum_over_time(g[30s] @ 60)", "rate(c[40s:10s] @ 60)"])
+                "sum_over_time(g[30s] @ 60)", "rate(c[40s:10s] @ 60)",
+                *at_forms])
     for q in queries:
         fn = q.split("(")[0]
         a = _mat(det.query_range(q, 0, 80 * S, 10 * S))
@@ -772,13 +779,18 @@ def test_production_native_range_functions_agree(spark):
               "irate(c[30s])", "deriv(c[30s])", "predict_linear(c[30s], 60)",
               # r13: rate over a subquery is native too (prev through the
               # inner grid); the inner selector itself is aggregation-free
-              "rate(c[40s:10s])", "irate(c[40s:10s])"):
+              "rate(c[40s:10s])", "irate(c[40s:10s])", *at_forms):
         p = _plan_str(prod.query_range(q, 0, 80 * S, 10 * S).df)
         assert "collect_list" not in p, q
         assert "SortAggregate" not in p, q
-    # ...and the deterministic engine keeps the order-stable fold
+    # ...the deterministic engine keeps the order-stable fold where a
+    # native float sum would reassociate...
     p = _plan_str(det.query_range("rate(c[30s])", 0, 80 * S, 10 * S).df)
     assert "collect_list" in p
+    # ...and runs the same native aggregation for exact functions
+    for q in ("resets(c[30s])", "count_over_time(g[30s])"):
+        p = _plan_str(det.query_range(q, 0, 80 * S, 10 * S).df)
+        assert "collect_list" not in p, q
 
 
 def _hmat(result):

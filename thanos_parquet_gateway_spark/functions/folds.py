@@ -8,11 +8,15 @@ with Spark's higher-order functions (JVM-side, codegen'd — no Python):
 
     array_sort(collect_list(struct(order, value)))  →  aggregate(arr, 0.0, +)
 
-Used in two places:
-- per-(series, step) windows (rate family, *_over_time): arrays are bounded
-  by samples-per-window, so this is also the *scalable* plan at 100TB.
-- cross-series instant aggregations in ``deterministic=True`` mode (oracle
-  comparisons); production mode uses native partial aggregation instead.
+Used wherever order matters:
+- float sums in ``deterministic=True`` mode (oracle comparisons): the
+  sum/avg/stddev/stdvar_over_time windows, the rate family's extrapolation
+  and reset sums, the deriv/predict_linear regression and the cross-series
+  instant aggregations; production mode uses native partial aggregation
+  instead, and exact window functions run native in both modes.
+- window math with no native form in either mode (quantile/mad over time,
+  ts_of_min/max, histogram windows): arrays are bounded by
+  samples-per-window, so this is also a *scalable* plan at 100TB.
 """
 
 from __future__ import annotations

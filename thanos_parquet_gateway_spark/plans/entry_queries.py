@@ -3094,12 +3094,15 @@ def promql_resets_changes(spark, sf_dir):
 # ---------------------------------------------------------------------
 # Production-mode oracle entries (r13): each runs deterministic=False —
 # the SAME native-aggregation code path bench.py times (the rest of the
-# registry runs deterministic=True by contract).  Only queries whose
-# production math is BIT-EXACT under any partition order qualify for the
-# exact-compare oracle: window counts and cross-series sums of
-# integer-valued doubles (exact below 2^53), 0/1 transition sums over lag
-# pairs, and last-two-sample selections ((series, ts) is unique in the
-# corpus, so max_by picks deterministically).  The float-reassociating
+# registry runs deterministic=True by contract, which differs from
+# production only where a native float sum would reassociate: there it
+# folds order-stably).  Only queries whose production math is BIT-EXACT
+# under any partition order qualify for the exact-compare oracle: window
+# counts and cross-series sums of integer-valued doubles (exact below
+# 2^53), 0/1 transition sums over lag pairs, and last-two-sample
+# selections ((series, ts) is unique in the corpus, so max_by picks
+# deterministically) — the exact window functions among these run the
+# same native aggregation in both modes.  The float-reassociating
 # native families (sum/avg/stddev_over_time, rate's multi-reset correction
 # sum, the covar_pop/var_pop regression) CANNOT hash-match an exact oracle
 # by construction — their equivalence evidence is the det-vs-prod

@@ -9,8 +9,10 @@ Core design (SURVEY.md §4.2): instead of joining samples against a step grid
 (a shuffle join), every sample *computes the grid steps it serves* with
 ``sequence()`` + ``explode`` — pure map-side work — and a single groupBy per
 selector resolves lookback ("latest sample ≤ t within lookback", reference
-api/http/query.go:160,393-395).  Window functions like ``rate`` fold sorted
-per-(series, step) arrays with higher-order functions — bounded by
+api/http/query.go:160,393-395).  Window functions like ``rate`` aggregate
+per (series, step) — natively where the aggregate is exact or the mode is
+production, as folds over sorted arrays with higher-order functions where
+deterministic mode must keep float sums order-stable — bounded by
 samples-per-window, so the plan scales with data, not with query range.
 """
 
@@ -540,57 +542,9 @@ class Compiler:
         alive = F.col("value").isNotNull()
         if hist_cols:
             alive = alive | F.col("hist").isNotNull()
-        base = base.filter(alive)
-        rng = ms.range_ms
-        if vs.at_ms is not None:
-            at = self._resolve_at(vs.at_ms)
-            win = (base.filter((F.col("ts") > at - rng) & (F.col("ts") <= at)))
-            # @ is a per-step offset of (t - at) (upstream
-            # setOffsetForAtModifier converts @ to exactly that): shift the
-            # window samples into the step frame so every (t - range, t]
-            # boundary computation downstream — the rate family's
-            # extrapolation anchors above all — sees the anchored window
-            # as if it ended at t.  ts_of_*/timestamp subtract the shift
-            # back when exposing timestamps (functions.py).
-            out = (win.crossJoin(F.broadcast(self.grid_df()))
-                   .select("t", "sig", "labels",
-                           (F.col("ts") + (F.col("t") - _lit(at)))
-                           .alias("ts"), "value", *hist_cols))
-            return RangeVector(out, rng)
-        steps = F.explode(self._serve_steps(F.col("ts"), rng)).alias("t")
-        prev = None
-        if not self.p.deterministic:
-            # production: attach each sample's predecessor (lag per series,
-            # BEFORE the grid explode — one un-replicated shuffle of the
-            # samples) so the rate family can aggregate natively
-            def prev():
-                from pyspark.sql import Window as _W
-                w = _W.partitionBy("sig").orderBy("ts")
-                # histogram-carrying selectors additionally lag the hist and
-                # lead the ts (same WindowExec, no extra exchange/sort): the
-                # native histogram rate needs the predecessor histogram for
-                # reset pairs and the successor ts to decide first/last-in-
-                # window membership per ROW (__nts > t ≡ last in (t-r, t])
-                hist_lag = ([F.lag("hist").over(w).alias("__ph"),
-                             F.lead("ts").over(w).alias("__nts")]
-                            if hist_cols else [])
-                based = base.select("*",
-                                    F.lag("value").over(w).alias("__pv"),
-                                    F.lag("ts").over(w).alias("__pts"),
-                                    *hist_lag)
-                return based.select(steps, "sig", "labels", "ts", "value",
-                                    "__pv", "__pts", *hist_cols,
-                                    *(["__ph", "__nts"] if hist_cols
-                                      else []))
-        # Both variants are THUNKS: each consumer reads exactly one of
-        # df/prev, and building the other is a wasted JVM plan op with a
-        # full eager re-analysis of the selector subtree — measured at
-        # ~50 ms per op on the bench plans, pure per-query compile latency.
-        return RangeVector(
-            lambda: base.select(steps, "sig", "labels", "ts", "value",
-                                *hist_cols),
-            rng, prev=prev,
-            columns=["t", "sig", "labels", "ts", "value", *hist_cols])
+        at = None if vs.at_ms is None else self._resolve_at(vs.at_ms)
+        return self._range_vector(base.filter(alive), ms.range_ms, at,
+                                  hist_cols)
 
     def _subquery(self, sq: A.Subquery) -> RangeVector:
         """x[range:step] — inner expr evaluated on its own epoch-aligned grid,
@@ -599,8 +553,9 @@ class Compiler:
         sub_step = sq.step_ms or p.subquery_step_ms
         outer_end = p.end_ms - sq.offset_ms
         outer_start = p.start_ms - sq.offset_ms
-        if sq.at_ms is not None:
-            outer_start = outer_end = self._resolve_at(sq.at_ms) - sq.offset_ms
+        at = None if sq.at_ms is None else self._resolve_at(sq.at_ms)
+        if at is not None:
+            outer_start = outer_end = at - sq.offset_ms
         inner_start = int(math.ceil((outer_start - sq.range_ms + 1) / sub_step)) * sub_step
         inner_end = outer_end
         inner = Compiler(self.samples,
@@ -628,49 +583,70 @@ class Compiler:
         pts = iv.df.select("sig", "labels",
                            (F.col("t") + _lit(sq.offset_ms)).alias("ts"),
                            "value", *hist_cols)
-        if sq.at_ms is not None:
-            at = self._resolve_at(sq.at_ms)
-            win = pts.filter((F.col("ts") > at - sq.range_ms) & (F.col("ts") <= at))
-            # same per-step re-anchor as the @ matrix selector: window
-            # points move into the step frame so (t - range, t] boundary
-            # math (rate extrapolation) is anchored at the @ time
-            out = (win.crossJoin(F.broadcast(self.grid_df()))
-                   .select("t", "sig", "labels",
-                           (F.col("ts") + (F.col("t") - _lit(at)))
-                           .alias("ts"), "value", *hist_cols))
-            return RangeVector(out, sq.range_ms)
-        steps = F.explode(self._serve_steps(F.col("ts"), sq.range_ms)).alias("t")
-        prev = None
-        if not self.p.deterministic:
-            # production: attach each inner-grid point's predecessor (lag
-            # per series BEFORE the window explode), exactly like the
-            # matrix-selector path — the rate family then aggregates
-            # natively over subquery windows too.  Sound because the inner
-            # result has one row per (sig, inner step): (sig, ts) is unique,
-            # and every grid point that can fall inside ANY outer window is
-            # ≥ inner_start by construction, so a window's true predecessor
-            # chain is fully contained in ``pts`` (a predecessor before
-            # inner_start is outside every window and consumers gate on
-            # __pts > t - range).
-            def prev():
-                from pyspark.sql import Window as _W
-                w = _W.partitionBy("sig").orderBy("ts")
-                hist_lag = ([F.lag("hist").over(w).alias("__ph"),
-                             F.lead("ts").over(w).alias("__nts")]
-                            if hist_cols else [])
-                based = pts.select("*",
-                                   F.lag("value").over(w).alias("__pv"),
-                                   F.lag("ts").over(w).alias("__pts"),
-                                   *hist_lag)
-                return based.select(steps, "sig", "labels", "ts", "value",
-                                    "__pv", "__pts", *hist_cols,
-                                    *(["__ph", "__nts"] if hist_cols
-                                      else []))
-        return RangeVector(
-            lambda: pts.select(steps, "sig", "labels", "ts", "value",
-                                *hist_cols),
-            sq.range_ms, prev=prev,
-            columns=["t", "sig", "labels", "ts", "value", *hist_cols])
+        return self._range_vector(pts, sq.range_ms, at, hist_cols)
+
+    def _range_vector(self, pts: DataFrame, rng: int, at: int | None,
+                      hist_cols: list[str]) -> RangeVector:
+        """Windows (t - rng, t] per step t over points (sig, labels, ts,
+        value[, hist]): a matrix selector's samples or a subquery's
+        inner-grid results.  Each point computes the steps it serves
+        (explode of _serve_steps, map-side, no grid join).
+
+        ``at`` fixes every step's window at (at - rng, at].  Upstream
+        (setOffsetForAtModifier) turns @ into a per-step offset of
+        t - at, so the window rows cross-join the grid and shift into the
+        step frame: every (t - range, t] boundary computation downstream,
+        the rate family's extrapolation anchors above all, sees the
+        anchored window as if it ended at t.  ts_of_*/timestamp subtract
+        the shift back when exposing timestamps (functions.py).
+
+        ``prev`` attaches each point's predecessor in its series (lag over
+        ts BEFORE the explode / cross-join, so the points shuffle once,
+        un-replicated); its ts (``__pts``) and, for histogram-carrying
+        points, the successor ts (``__nts``) shift with ``ts``.  Sound
+        because (sig, ts) is unique in the points, and consumers gate on
+        __pts > t - range: a predecessor outside the window (or missing,
+        as before the first @-window row) counts as no predecessor."""
+        if at is None:
+            steps = F.explode(self._serve_steps(F.col("ts"), rng)).alias("t")
+
+            def spread(df: DataFrame, cols: list[str]) -> DataFrame:
+                return df.select(steps, *cols)
+        else:
+            pts = pts.filter((F.col("ts") > at - rng) & (F.col("ts") <= at))
+
+            def spread(df: DataFrame, cols: list[str]) -> DataFrame:
+                shift = F.col("t") - _lit(at)
+                return df.crossJoin(F.broadcast(self.grid_df())).select(
+                    "t", *[(F.col(c) + shift).alias(c)
+                           if c in ("ts", "__pts", "__nts") else c
+                           for c in cols])
+
+        def prev():
+            from pyspark.sql import Window as _W
+            w = _W.partitionBy("sig").orderBy("ts")
+            # histogram-carrying points additionally lag the hist and lead
+            # the ts (same WindowExec, no extra exchange/sort): the native
+            # histogram rate needs the predecessor histogram for reset
+            # pairs and the successor ts to decide first/last-in-window
+            # membership per ROW (__nts > t ≡ last in (t-r, t])
+            hist_lag = ([F.lag("hist").over(w).alias("__ph"),
+                         F.lead("ts").over(w).alias("__nts")]
+                        if hist_cols else [])
+            based = pts.select("*",
+                               F.lag("value").over(w).alias("__pv"),
+                               F.lag("ts").over(w).alias("__pts"),
+                               *hist_lag)
+            return spread(based, ["sig", "labels", "ts", "value",
+                                  "__pv", "__pts", *hist_cols,
+                                  *(["__ph", "__nts"] if hist_cols else [])])
+        # Both variants are THUNKS: each consumer reads exactly one of
+        # df/prev, and building the other is a wasted JVM plan op with a
+        # full eager re-analysis of the selector subtree — measured at
+        # ~50 ms per op on the bench plans, pure per-query compile latency.
+        cols = ["sig", "labels", "ts", "value", *hist_cols]
+        return RangeVector(lambda: spread(pts, cols), rng, prev=prev,
+                           columns=["t", *cols])
 
     def compile_vector(self, node: A.Node) -> InstantVector:
         v = self.compile(node)

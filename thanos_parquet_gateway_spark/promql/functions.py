@@ -4,9 +4,17 @@ label manipulation, time functions (SURVEY.md §2.C).
 The rate family implements Prometheus' published extrapolation algorithm
 (counter-reset correction + boundary extrapolation) — the reference proves
 these semantics via differential tests (reference db/db_test.go:616-659).
-All window math folds *sorted* per-(series, step) arrays with Spark
-higher-order functions: JVM-side, deterministic, bounded by samples-per-window
-— the scalable shape at 100TB (no driver collects, no UDFs).
+Window math runs as native per-(series, step) aggregation wherever the
+aggregate is exact: counts, extremes, first/last selections and, through
+the lagged predecessor columns every range vector carries
+(RangeVector.prev), irate/idelta and resets/changes.  Where a native float
+sum would reassociate (sum/avg/stddev/stdvar_over_time, the rate family's
+extrapolation and reset sums, the deriv/predict_linear regression),
+deterministic mode instead folds the *sorted* window array sequentially
+with Spark higher-order functions (functions/folds.py) — JVM-side, bounded
+by samples-per-window, no driver collects, no UDFs.  Order-dependent
+window math with no native form (quantile/mad, smoothing, histogram
+windows) folds in both modes.
 """
 
 from __future__ import annotations
@@ -172,39 +180,34 @@ def _window_floats(c: Compiler, rv: RangeVector, min_n: int = 1):
 _OVER_TIME = {
     "sum_over_time": lambda arr: folds.fold_sum(arr),
     "avg_over_time": lambda arr: folds.fold_avg(arr),
-    "count_over_time": lambda arr: F.size(arr).cast(D),
     "min_over_time": lambda arr: F.coalesce(
         F.array_min(F.filter(folds.values_of(arr), lambda v: ~F.isnan(v))), NAN()),
     "max_over_time": lambda arr: F.coalesce(
         F.array_max(F.filter(folds.values_of(arr), lambda v: ~F.isnan(v))), NAN()),
-    "last_over_time": lambda arr: F.element_at(arr, -1)["v"],
-    "first_over_time": lambda arr: F.element_at(arr, 1)["v"],
     "stddev_over_time": lambda arr: folds.fold_stddev_pop(arr),
     "stdvar_over_time": lambda arr: folds.fold_var_pop(arr),
-    "present_over_time": lambda arr: _lit(1.0),
     "mad_over_time": lambda arr: folds.fold_mad(arr),
     # experimental ts_of_* family (public Prometheus 3.x): the timestamp, in
-    # SECONDS, of the last/extreme sample in the window.  Extremes update on
+    # SECONDS, of the extreme sample in the window.  Extremes update on
     # >= / <= like the upstream fold, so the LAST occurrence of a tied
     # extreme wins; a NaN current-extreme is always replaced (IsNaN(acc)
     # branch upstream), and NaN candidates never beat a real extreme (the
     # ~isnan(x) mask — Spark would otherwise order NaN above every double).
-    "ts_of_last_over_time": lambda arr: F.element_at(arr, -1)["o"].cast(D) / 1000.0,
-    "ts_of_first_over_time": lambda arr: F.element_at(arr, 1)["o"].cast(D) / 1000.0,
     "ts_of_max_over_time": lambda arr: _fold_ts_of(arr, "max"),
     "ts_of_min_over_time": lambda arr: _fold_ts_of(arr, "min"),
 }
 
 
-# Production-mode (deterministic=False) native-aggregation twins of the
-# order-insensitive _OVER_TIME folds: each entry yields the .agg(...) list,
-# with the result aliased "__v".  Range vectors exclude stale markers
-# (value is never NULL) and the native path is only taken when the range
-# vector carries no histogram column, so plain value aggregates see exactly
-# the fold's float samples.  min/max skip NaN like the folds (NaN→NULL
-# before min/max; all-NaN windows coalesce back to NaN); every window has
-# ≥1 sample by construction (explode emits a (t, sig) group only for
-# samples inside it).
+# Native window aggregations of the order-insensitive *_over_time
+# functions: each entry yields the .agg(...) list, with the result aliased
+# "__v".  Range vectors exclude stale markers (value is never NULL).
+# Value aggregates run only on range vectors without a histogram column
+# (histogram windows take _over_time_hist or the float-only fold); the
+# _EVERY_ROW aggregates see every window row, histogram samples included,
+# on either.  min/max skip NaN like the upstream fold (NaN→NULL before
+# min/max; all-NaN windows coalesce back to NaN); every window has ≥1
+# sample by construction (explode emits a (t, sig) group only for samples
+# inside it).
 def _nanf() -> Column:
     v = F.col("value")
     return F.when(~F.isnan(v), v)
@@ -230,6 +233,16 @@ _OVER_TIME_NATIVE = {
     "ts_of_first_over_time": lambda: [
         (F.min("ts").cast(D) / 1000.0).alias("__v")],
 }
+
+# native aggregates that reassociate float sums: deterministic mode folds
+# these instead (order-stable Kahan/sequential sums)
+_REASSOCIATING = frozenset(("sum_over_time", "avg_over_time",
+                            "stddev_over_time", "stdvar_over_time"))
+# native aggregates that read every window row, histogram samples included
+_EVERY_ROW = frozenset(("count_over_time", "present_over_time",
+                        "ts_of_first_over_time", "ts_of_last_over_time"))
+_OVER_TIME_FNS = _OVER_TIME.keys() | _OVER_TIME_NATIVE.keys() \
+    | {"quantile_over_time"}
 
 
 def _fold_ts_of(arr: Column, mode: str) -> Column:
@@ -346,17 +359,18 @@ def _over_time(c: Compiler, call: A.Call) -> InstantVector:
         rv = _range_arg(c, call, 0)
         if fn in _OVER_TIME_HIST and "hist" in rv.columns:
             return _over_time_hist(c, rv, fn)
-        if (not c.p.deterministic and fn in _OVER_TIME_NATIVE
-                and "hist" not in rv.columns):
-            # production mode: the window fold is a plain aggregation —
-            # compile it as native (mostly codegen HashAggregate) aggregate
-            # functions with map-side partial aggregation, instead of
-            # shipping every sample through a collect_list buffer to the
-            # reducer and folding the sorted array there.  Exact for
-            # count/min/max/first/last/ts_of_*/present; sum/avg/stddev/
-            # stdvar trade the order-stable Kahan fold for float-addition
+        if (fn in _OVER_TIME_NATIVE
+                and (fn in _EVERY_ROW or "hist" not in rv.columns)
+                and not (c.p.deterministic and fn in _REASSOCIATING)):
+            # the window function is a plain aggregation — compile it as
+            # native (mostly codegen HashAggregate) aggregate functions
+            # with map-side partial aggregation, instead of shipping every
+            # sample through a collect_list buffer to the reducer and
+            # folding the sorted array there.  Exact for count/min/max/
+            # first/last/ts_of_*/present; production sum/avg/stddev/stdvar
+            # trade the order-stable Kahan fold for float-addition
             # reassociation (run-to-run low-bit nondeterminism — the same
-            # trade the cross-series production aggregations already make).
+            # trade the cross-series production aggregations make).
             from thanos_parquet_gateway_spark.promql.compiler import hgroup
             # labels are NOT rebuilt here: the fused projection below
             # (and _drop_name's successor) builds them once from sig —
@@ -423,12 +437,12 @@ def _extrapolated(c: Compiler, rv: RangeVector, counter: bool,
     histogram samples take the bucket-wise path (_extrapolated_hist); mixed
     float/histogram windows are dropped (Prometheus skips them with a
     warning)."""
-    if "hist" in rv.columns:
-        if not c.p.deterministic and rv.prev is not None:
-            return _extrapolated_hist_native(c, rv, counter, is_rate)
+    hist = "hist" in rv.columns
+    if not c.p.deterministic:  # native; reassociates the reset sums
+        return (_extrapolated_hist_native if hist else _extrapolated_native)(
+            c, rv, counter, is_rate)
+    if hist:
         return _extrapolated_hist(c, rv, counter, is_rate)
-    if not c.p.deterministic and rv.prev is not None:
-        return _extrapolated_native(c, rv, counter, is_rate)
     g = _collect_window(rv).filter(F.size("arr") >= 2)
     arr = F.col("arr")
     n = F.size(arr).cast(D)
@@ -477,12 +491,13 @@ def _extrapolated_native(c: Compiler, rv: RangeVector, counter: bool,
     same as the cross-series aggregations)."""
     from thanos_parquet_gateway_spark.promql.compiler import hgroup
     rng = rv.range_ms
+    rows = rv.prev
     in_win_pair = F.col("__pts") > (F.col("t") - _lit(rng))
     corr = F.when(in_win_pair
                   & ~F.isnan(F.col("value")) & ~F.isnan(F.col("__pv"))
                   & (F.col("value") < F.col("__pv")),
                   F.col("__pv")).otherwise(_lit(0.0))
-    g = (hgroup(rv.prev, "sig",
+    g = (hgroup(rows, "sig",
                 F.count(_lit(1)).alias("__wn"),
                 F.min("ts").alias("__ft"),
                 F.max("ts").alias("__lt"),
@@ -764,39 +779,26 @@ def _instant_pair(c: Compiler, rv: RangeVector, kind: str) -> InstantVector:
     stands alone, mirroring the float counter rule)."""
     if "hist" in rv.columns:
         return _instant_pair_hist(c, rv, kind)
-    if not c.p.deterministic and rv.prev is not None:
-        # production: the window's last TWO samples are the max_by(ts) row
-        # plus the predecessor it carries (attached pre-explode) — one
-        # native aggregation, no collect_list fold.  ≥2-samples filter ≡
-        # "the last sample's predecessor is itself inside the window".
-        from thanos_parquet_gateway_spark.promql.compiler import hgroup
-        # three primitive max_by's, not one max_by(struct): a struct
-        # aggregation BUFFER is not UnsafeRow-mutable and demotes the whole
-        # aggregation to SortAggregate (caught by the r12 plan pin); the
-        # primitive buffers stay on codegen HashAggregate.  All three are
-        # keyed on the same ts, so they read the same sample row whenever
-        # (sig, ts) is unique — tied timestamps pick per-column, the same
-        # production-mode tie trade the latest-sample selection makes.
-        g = (hgroup(rv.prev, "sig",
-                    F.max("ts").alias("__lt"),
-                    F.max_by("value", "ts").alias("__lv"),
-                    F.max_by("__pv", "ts").alias("__lpv"),
-                    F.max_by("__pts", "ts").alias("__lpt"))
-             .filter(F.col("__lpt").isNotNull()
-                     & (F.col("__lpt") > F.col("t") - _lit(rv.range_ms))))
-        last_t, prev_t = F.col("__lt"), F.col("__lpt")
-        last_v, prev_v = F.col("__lv"), F.col("__lpv")
-        dt_s = (last_t - prev_t).cast(D) / 1000.0
-        if kind == "irate":
-            dv = F.when(last_v >= prev_v, last_v - prev_v).otherwise(last_v)
-            val = dv / dt_s
-        else:
-            val = last_v - prev_v
-        return _finalize(g, val)
-    g = _collect_window(rv).filter(F.size("arr") >= 2)
-    arr = F.col("arr")
-    last_t, prev_t = F.element_at(arr, -1)["o"], F.element_at(arr, -2)["o"]
-    last_v, prev_v = F.element_at(arr, -1)["v"], F.element_at(arr, -2)["v"]
+    # the window's last TWO samples are the max_by(ts) row plus the
+    # predecessor it carries (RangeVector.prev) — one native aggregation,
+    # no collect_list fold.  ≥2-samples filter ≡ "the last sample's
+    # predecessor is itself inside the window".
+    from thanos_parquet_gateway_spark.promql.compiler import hgroup
+    # three primitive max_by's, not one max_by(struct): a struct
+    # aggregation BUFFER is not UnsafeRow-mutable and demotes the whole
+    # aggregation to SortAggregate (caught by the r12 plan pin); the
+    # primitive buffers stay on codegen HashAggregate.  All three are keyed
+    # on the same ts, so they read the same sample row because (sig, ts) is
+    # unique in a window (converted data and replica dedup guarantee it).
+    g = (hgroup(rv.prev, "sig",
+                F.max("ts").alias("__lt"),
+                F.max_by("value", "ts").alias("__lv"),
+                F.max_by("__pv", "ts").alias("__lpv"),
+                F.max_by("__pts", "ts").alias("__lpt"))
+         .filter(F.col("__lpt").isNotNull()
+                 & (F.col("__lpt") > F.col("t") - _lit(rv.range_ms))))
+    last_t, prev_t = F.col("__lt"), F.col("__lpt")
+    last_v, prev_v = F.col("__lv"), F.col("__lpv")
     dt_s = (last_t - prev_t).cast(D) / 1000.0
     if kind == "irate":
         dv = F.when(last_v >= prev_v, last_v - prev_v).otherwise(last_v)
@@ -876,35 +878,6 @@ def _double_exp_smoothing(c: Compiler, call: A.Call) -> InstantVector:
     res = F.aggregate(F.slice(arr, 2, F.greatest(F.size(arr) - 1, _lit(0))),
                       acc0, step)
     return _finalize(g, res["s"])
-
-
-def _counts_fold(arr: Column, mode: str) -> Column:
-    """resets: count v[i] < v[i-1]; changes: count v[i] != v[i-1] (NaN→NaN is
-    not a change).  The explicit ``init`` flag (same as _counts_hist) keeps
-    the window's FIRST sample from ever counting — upstream funcChanges/
-    funcResets iterate from the second sample, and without the flag a
-    leading-NaN sample scored a phantom change (isnan(x) forced the hit
-    while both_nan stayed NULL against the NULL accumulator; caught by the
-    r12 det-vs-prod differential)."""
-    acc0 = F.struct(_lit(False).alias("init"),
-                    _lit(None).cast(D).alias("prev"), _lit(0.0).alias("n"))
-
-    def merge(a, x):
-        if mode == "resets":
-            # Spark orders NaN above every double (so 5 < NaN is TRUE here),
-            # but Go/IEEE comparisons with NaN are always false — mask NaN on
-            # either side so NaN transitions never count as resets.
-            hit = ~F.isnan(x["v"]) & ~F.isnan(a["prev"]) & (x["v"] < a["prev"])
-        else:
-            both_nan = F.isnan(x["v"]) & F.isnan(a["prev"])
-            hit = (((x["v"] != a["prev"]) | F.isnan(x["v"])
-                    | F.isnan(a["prev"])) & ~both_nan)
-        inc = F.when(a["init"] & F.coalesce(hit, _lit(False)), 1.0) \
-               .otherwise(0.0)
-        return F.struct(_lit(True).alias("init"), x["v"].alias("prev"),
-                        (a["n"] + inc).alias("n"))
-
-    return F.aggregate(arr, acc0, merge)["n"]
 
 
 def _counts_hist(c: Compiler, rv: RangeVector, mode: str) -> InstantVector:
@@ -1325,7 +1298,7 @@ def dispatch(c: Compiler, call: A.Call):
         df = iv.df.withColumn("value", _MATH_FUNCS[fn](F.col("value")).cast(D))
         return _iv(_drop_name(df))
 
-    if fn in _OVER_TIME or fn == "quantile_over_time":
+    if fn in _OVER_TIME_FNS:
         return _over_time(c, call)
 
     if fn in ("rate", "increase"):
@@ -1349,32 +1322,30 @@ def dispatch(c: Compiler, call: A.Call):
         rv = _range_arg(c, call)
         if "hist" in rv.columns:
             return _counts_hist(c, rv, fn)
-        if not c.p.deterministic and rv.prev is not None:
-            # production: a transition count is a plain aggregation over
-            # (sample, predecessor) pairs — a pair counts iff the
-            # predecessor is itself inside the window (__pts > t - range),
-            # which is exactly the set of consecutive pairs _counts_fold
-            # walks.  Native HashAggregate with map-side partials, and
-            # integer-exact (sums of 0.0/1.0 — no float-reassociation
-            # trade, unlike sum_over_time).  NaN rules mirror the fold
-            # verbatim; a NULL predecessor (first sample of a series)
-            # falls out via coalesce(hit, false).
-            from thanos_parquet_gateway_spark.promql.compiler import hgroup
-            v, pv = F.col("value"), F.col("__pv")
-            in_win = F.col("__pts") > (F.col("t") - _lit(rv.range_ms))
-            if fn == "resets":
-                hit = ~F.isnan(v) & ~F.isnan(pv) & (v < pv)
-            else:
-                both_nan = F.isnan(v) & F.isnan(pv)
-                hit = ((v != pv) | F.isnan(v) | F.isnan(pv)) & ~both_nan
-            g = hgroup(
-                rv.prev, "sig",
-                F.sum(F.when(F.coalesce(in_win & hit, _lit(False)),
-                             _lit(1.0)).otherwise(_lit(0.0))).alias("__v"))
-            return _finalize(g, F.col("__v"))
-        g = _collect_window(rv)
-        val = _counts_fold(F.col("arr"), fn)
-        return _finalize(g, val)
+        # a transition count is a plain aggregation over (sample,
+        # predecessor) pairs — a pair counts iff the predecessor is itself
+        # inside the window (__pts > t - range), which is exactly the set
+        # of consecutive pairs upstream funcResets/funcChanges walk.  Native
+        # HashAggregate with map-side partials, and integer-exact (sums of
+        # 0.0/1.0 — no float reassociation).  Spark orders NaN above every
+        # double, but Go/IEEE comparisons with NaN are always false: NaN on
+        # either side never counts as a reset, and NaN→NaN is not a
+        # change.  A NULL predecessor (first sample of a series) falls out
+        # via coalesce(hit, false).
+        from thanos_parquet_gateway_spark.promql.compiler import hgroup
+        rows = rv.prev
+        v, pv = F.col("value"), F.col("__pv")
+        in_win = F.col("__pts") > (F.col("t") - _lit(rv.range_ms))
+        if fn == "resets":
+            hit = ~F.isnan(v) & ~F.isnan(pv) & (v < pv)
+        else:
+            both_nan = F.isnan(v) & F.isnan(pv)
+            hit = ((v != pv) | F.isnan(v) | F.isnan(pv)) & ~both_nan
+        g = hgroup(
+            rows, "sig",
+            F.sum(F.when(F.coalesce(in_win & hit, _lit(False)),
+                         _lit(1.0)).otherwise(_lit(0.0))).alias("__v"))
+        return _finalize(g, F.col("__v"))
     if fn == "deriv":
         return _deriv(c, call)
     if fn == "predict_linear":

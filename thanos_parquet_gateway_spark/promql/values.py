@@ -8,6 +8,7 @@ plays the role of the reference's lazy series sets (db/seriesset.go:58-111).
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame
 
@@ -18,7 +19,9 @@ class EvalParams:
     end_ms: int
     step_ms: int
     lookback_ms: int = 300_000  # reference default (api/http/query.go:160)
-    deterministic: bool = False  # order-stable folds for oracle comparison
+    # order-stable sequential folds wherever a native float sum would
+    # reassociate (oracle comparison); exact functions run native either way
+    deterministic: bool = False
     subquery_step_ms: int = 60_000
     # @ start()/end() anchors: upstream PREPROCESSES these against the
     # top-level query range (promql engine.go setOffsetForAtModifier path),
@@ -49,32 +52,30 @@ class RangeVector:
     """df: (t long, sig string, labels map<string,string>, ts long, value double)
     — all samples in (t - range, t] per step t.
 
-    ``prev``: production-mode (deterministic=False) twin of ``df`` carrying
-    two extra columns per sample — ``__pv`` / ``__pts``, the value/ts of the
-    series' PREVIOUS sample (lag over (sig, ts), computed BEFORE the step
-    grid explode so the samples are shuffled once, un-replicated).  With the
-    predecessor attached, the rate family's window math (counter resets,
-    first/last sample) becomes plain native aggregation instead of a
-    collect_list fold.  Provided by matrix selectors AND subqueries (the
-    inner result has one row per (sig, inner step), so the lag is
-    well-defined there too).  None on paths that don't provide it
-    (@-anchored windows, deterministic mode) — consumers must fall back to
-    the fold.
+    ``prev``: ``df`` with two extra columns per sample — ``__pv`` /
+    ``__pts``, the value/ts of the series' PREVIOUS sample (lag over
+    (sig, ts), computed BEFORE the step grid explode so the samples are
+    shuffled once, un-replicated); histogram-carrying vectors add the
+    predecessor histogram ``__ph`` and the successor ts ``__nts``.  With
+    the predecessor attached, the window math of the rate family,
+    irate/idelta and resets/changes (counter resets, first/last samples,
+    transitions) is plain native aggregation instead of a collect_list
+    fold.  Every range vector carries it: matrix selectors and subqueries,
+    plain and @-anchored, in both evaluation modes.
 
-    ``df`` and ``prev`` may be passed as zero-arg thunks: each consumer uses
-    exactly one of the two variants, and building the unused one is pure
-    driver latency (every classic-mode DataFrame op eagerly re-analyzes the
-    whole accumulated plan on the JVM).  The thunk is forced and cached on
-    first attribute access; ``columns`` lets hist-dispatch checks run
-    without forcing anything when the constructor declared the layout."""
+    ``df`` and ``prev`` are zero-arg thunks: each consumer uses exactly one
+    of the two variants, and building the unused one is pure driver
+    latency (every classic-mode DataFrame op eagerly re-analyzes the whole
+    accumulated plan on the JVM).  The thunk is forced and cached on first
+    attribute access; ``columns`` lets hist-dispatch checks run without
+    forcing anything."""
 
-    def __init__(self, df: DataFrame, range_ms: int = 0,
-                 prev: DataFrame | None = None,
-                 columns: list[str] | None = None):
+    def __init__(self, df: Callable[[], DataFrame], range_ms: int,
+                 prev: Callable[[], DataFrame], columns: list[str]):
         self._df = df
         self.range_ms = range_ms
         self._prev = prev
-        self._columns = columns
+        self.columns = columns
 
     @property
     def df(self) -> DataFrame:
@@ -83,16 +84,10 @@ class RangeVector:
         return self._df
 
     @property
-    def prev(self) -> DataFrame | None:
-        if self._prev is not None and callable(self._prev):
+    def prev(self) -> DataFrame:
+        if callable(self._prev):
             self._prev = self._prev()
         return self._prev
-
-    @property
-    def columns(self) -> list[str]:
-        if self._columns is None:
-            self._columns = self.df.columns
-        return self._columns
 
 
 @dataclass
