@@ -25,6 +25,22 @@ def sf_dir():
     return SF_DIR
 
 
+def spark_jobs(spark, fn, *a, **kw):
+    """Run ``fn(*a, **kw)`` on this thread under a fresh Spark job group;
+    return (its result, the number of Spark jobs it ran)."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count probe", False)
+    try:
+        out = fn(*a, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def make_samples(spark, rows):
     """rows: list of (labels: dict, ts_ms: int, value) → samples df.
     value=None is the staleness marker (schema.py); a dict

@@ -102,45 +102,126 @@ def test_manifest_single_pass(converted, spark, sf_dir):
 def test_label_stats_sidecar(converted, spark):
     """Dictionary-shortcut parity (reference search/search.go:153-201 reads
     LabelValues from parquet dictionaries; SURVEY.md §7.3): convert writes a
-    _label_stats sidecar, the engine's unconstrained metadata fast path
-    answers from it — same results as the scan path, no samples scan in the
-    plan — and time bounds still prune by date."""
-    import io
-    from contextlib import redirect_stdout
-
-    from thanos_parquet_gateway_spark.convert.convert import read_label_stats
+    _label_stats sidecar, ``read_label_stats`` loads it into a driver-side
+    LabelIndex, and the engine's matcher-free metadata answers come from
+    it — same results as the scan path, zero Spark jobs — while time
+    bounds still select by date and matchers fall back to the scan."""
+    from tests.conftest import spark_jobs
+    from thanos_parquet_gateway_spark.api.http import QueryAPI
+    from thanos_parquet_gateway_spark.convert.convert import (
+        LabelIndex, read_label_stats)
     from thanos_parquet_gateway_spark.promql import PromQLEngine
 
     out, manifest, raw = converted
-    stats = read_label_stats(spark, out)
+    stats = spark.read.parquet(f"{out}/_label_stats")
     assert set(stats.columns) == {"stream", "date", "label", "value"}
+    idx = read_label_stats(spark, out)
+    assert isinstance(idx, LabelIndex) and idx.rows == stats.count()
     conv = spark.read.parquet(out)
     t0, t1 = 1704153600000, 1704412800000  # Jan 2 .. Jan 5
-    fast = PromQLEngine(conv, label_stats=stats)
+    fast = PromQLEngine(conv, label_index=idx)
     slow = PromQLEngine(conv)
+    assert fast.metadata_index(None) is idx
+    assert slow.metadata_index(None) is None
     for name in ("shard", "__name__"):
-        got = [r["value"] for r in
-               fast.label_values(name, None, t0, t1).collect()]
+        got = idx.values(name, t0, t1)
         want = [r["value"] for r in
                 slow.label_values(name, None, t0, t1).collect()]
         assert got == want and got
-    got = [r["name"] for r in fast.label_names(None, t0, t1).collect()]
+    got = idx.names(t0, t1)
     want = [r["name"] for r in slow.label_names(None, t0, t1).collect()]
     assert got == want == ["__name__", "shard", "user"]
-    # the fast plan reads the sidecar, not the samples
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        fast.label_values("shard", None, t0, t1).explain("formatted")
-    plan = buf.getvalue()
-    assert "_label_stats" in plan
-    assert "labels" not in [ln for ln in plan.splitlines()
-                            if "ReadSchema" in ln][0]
+    # date bounds: one day's answer is that day's scan; days without data
+    # (before the table, and clamped negative bounds) answer nothing
+    d0, d1 = t0, t0 + 86_400_000 - 1
+    assert idx.values("user", d0, d1) == [
+        r["value"] for r in slow.label_values("user", None, d0, d1).collect()]
+    assert len(idx.values("user", d0, d1)) < len(idx.values("user", t0, t1))
+    assert idx.names(1672531200000, 1672617600000) == []  # 2023-01-01
+    assert idx.names(-2, -1) == [] and idx.values("user", -2, -1) == []
+    # open ranges arrive as extreme bounds (Prometheus MinTime/MaxTime)
+    lo, hi = -(2 ** 63), 2 ** 63 - 1
+    assert idx.values("shard", lo, hi) == [
+        r["value"] for r in slow.label_values("shard", None, lo, hi).collect()]
+    # the index answer runs zero Spark jobs; the scan it replaces does not
+    api_fast, api_slow = QueryAPI(fast), QueryAPI(slow)
+    (names, _), jobs = spark_jobs(spark, api_fast.labels, None, t0, t1)
+    assert names == want and jobs == 0
+    (vals, _), jobs = spark_jobs(spark, api_fast.label_values, "shard",
+                                 None, t0, t1)
+    assert vals == idx.values("shard", t0, t1) and jobs == 0
+    _, jobs = spark_jobs(spark, api_slow.label_values, "shard", None, t0, t1)
+    assert jobs > 0
     # matchers fall back to the filtered scan
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        fast.label_values("shard", ['click{user="7"}'], t0, t1) \
-            .explain("formatted")
-    assert "_label_stats" not in buf.getvalue()
+    m = ['click{user="7"}']
+    assert fast.metadata_index(m) is None
+    (vals, _), jobs = spark_jobs(spark, api_fast.label_values, "shard", m,
+                                 t0, t1)
+    assert vals == api_slow.label_values("shard", m, t0, t1)[0] and vals
+    assert jobs > 0
+
+
+def test_label_index_quota_parity(converted, spark):
+    """Index-backed and scan-backed QueryAPIs over the same converted table
+    give the same quota rejections, ``limit`` truncation warnings and
+    default-quota backstop (the assertions of test_api's
+    test_label_endpoint_row_quotas / test_default_metadata_row_quota);
+    byte/shard admission applies to the scan only, since an index answer
+    scans nothing."""
+    from thanos_parquet_gateway_spark.api.http import (
+        DEFAULT_METADATA_ROW_QUOTA, QueryAPI, QuotaExceeded)
+    from thanos_parquet_gateway_spark.convert.convert import read_label_stats
+    from thanos_parquet_gateway_spark.promql import PromQLEngine
+
+    out, _, _ = converted
+    conv = spark.read.parquet(out)
+    fast = PromQLEngine(conv, label_index=read_label_stats(spark, out))
+    slow = PromQLEngine(conv)
+    t0, t1 = 1704067200000, 1706486400000
+
+    def both(kw, method, *a, **call_kw):
+        """Outcome on the index-backed and the scan-backed API, checked
+        equal: (values, warnings) or the QuotaExceeded message."""
+        got = []
+        for eng in (fast, slow):
+            api = QueryAPI(eng, **kw)
+            try:
+                got.append(getattr(api, method)(*a, **call_kw))
+            except QuotaExceeded as e:
+                got.append(str(e))
+        assert got[0] == got[1], (kw, method, a, call_kw, got)
+        return got[0]
+
+    q = {"label_values_row_quota": 3, "label_names_row_quota": 50}
+    for name in ("user", "shard"):  # >3 distinct users, 8 shards
+        assert "3-row quota" in both(q, "label_values", name, None, t0, t1)
+    vals, warns = both({"label_values_row_quota": 10}, "label_values",
+                       "__name__", None, t0, t1)
+    assert 0 < len(vals) <= 10 and warns == []
+    names, warns = both(q, "labels", None, t0, t1)
+    assert names and warns == []
+    names, warns = both(q, "labels", None, t0, t1, limit=1)
+    assert len(names) == 1 and warns
+    # default_metadata_row_quota backstop
+    assert QueryAPI(fast).default_metadata_row_quota == \
+        DEFAULT_METADATA_ROW_QUOTA
+    vals, warns = both({}, "label_values", "shard", None, t0, t1)
+    assert vals and warns == []
+    tiny = {"default_metadata_row_quota": 2}
+    assert "2-row quota" in both(tiny, "label_values", "shard", None, t0, t1)
+    vals, warns = both(tiny, "label_values", "shard", None, t0, t1, limit=1)
+    assert len(vals) == 1 and warns
+    vals, warns = both({"label_values_row_quota": 50, **tiny},
+                       "label_values", "shard", None, t0, t1)
+    assert len(vals) > 2 and warns == []
+    assert both({"default_metadata_row_quota": 0}, "label_values", "shard",
+                None, t0, t1) == (vals, [])
+    # byte/shard quotas: the index scans nothing, the scan is admitted
+    all_names = QueryAPI(fast).labels(None, t0, t1)
+    for kw in ({"byte_quota": 1}, {"shard_quota": 1}):
+        assert QueryAPI(fast, **kw).labels(None, t0, t1) == all_names
+        with pytest.raises(QuotaExceeded):
+            QueryAPI(slow, **kw).labels(None, t0, t1)
 
 
 def test_planner_anti_join(converted, spark):

@@ -1058,6 +1058,58 @@ def test_label_values_quota_over_grpc(spark):
             assert names["values"] == ["__name__", "job"]
 
 
+def test_label_index_over_wire(spark, tmp_path):
+    """``QueryServer(label_index=...)`` answers matcher-free LabelNames/
+    LabelValues from the convert-time label index: the scan path's
+    answers (day-block granular: a label seen only on the next day is
+    absent) with zero Spark jobs.  A request carrying replica labels takes
+    the scan and omits the dropped label."""
+    from tests.conftest import spark_jobs
+    from thanos_parquet_gateway_spark.api import QueryServer
+    from thanos_parquet_gateway_spark.api import grpc_pb as pb
+    from thanos_parquet_gateway_spark.api.grpc_client import ThanosGrpcClient
+    from thanos_parquet_gateway_spark.api.grpc_server import ThanosGrpcServer
+    from thanos_parquet_gateway_spark.convert import convert_samples
+    from thanos_parquet_gateway_spark.convert.convert import read_label_stats
+
+    day = 86_400 * S
+    rows = [({"__name__": "m", "job": "a", "replica": "r1"}, 10 * S, 1.0),
+            ({"__name__": "m", "job": "a", "replica": "r2"}, 20 * S, 2.0),
+            ({"__name__": "n", "job": "b", "replica": "r1"}, 30 * S, 3.0),
+            ({"__name__": "m", "job": "c", "zone": "z"}, day + 10 * S, 4.0)]
+    out = str(tmp_path / "table")
+    convert_samples(make_samples(spark, rows), out)
+    table = spark.read.parquet(out)
+    jobs: dict = {}
+    answers: dict = {}
+    for path, qs in (("index", QueryServer(
+                          table, label_index=read_label_stats(spark, out))),
+                     ("scan", QueryServer(table))):
+        for m in ("label_names", "label_values"):
+            def counted(*a, _fn=getattr(qs, m), _key=(path, m), **kw):
+                res, jobs[_key] = spark_jobs(spark, _fn, *a, **kw)
+                return res
+            setattr(qs, m, counted)
+        with ThanosGrpcServer(qs) as srv, \
+                ThanosGrpcClient(srv.host, srv.port) as cli:
+            answers[path] = (cli.label_names(0, 60 * S)["values"],
+                             cli.label_values("job", 0, 60 * S)["values"])
+            if path == "index":
+                assert jobs == {("index", "label_names"): 0,
+                                ("index", "label_values"): 0}
+                msgs = cli.call("/thanos.Store/LabelNames",
+                                pb.encode_label_names_request(
+                                    0, 60 * S,
+                                    without_replica_labels=["replica"]))
+                assert pb.decode_label_strings_response(msgs[0])[
+                    "values"] == ["__name__", "job"]
+                assert jobs[("index", "label_names")] > 0
+    assert answers["index"] == answers["scan"] == \
+        (["__name__", "job", "replica"], ["a", "b"])
+    assert jobs[("scan", "label_names")] > 0
+    assert jobs[("scan", "label_values")] > 0
+
+
 def test_conformant_peer_skips_nhcb_private_enum(spark):
     """A CONFORMANT Store API client (proto3 open enums: values outside
     the storepb Chunk.Encoding range are preserved but unrecognized) must

@@ -393,56 +393,72 @@ class QueryAPI:
                  "stats": stats}, res)
 
     # -- metadata endpoints: (data, warnings) pairs ----------------------
-    def _limited(self, df, limit: int, quota: int = 0):
-        """Collect limit+1 rows; report truncation as a warning instead of
+    def _scan(self, df, pick):
+        """A metadata DataFrame as a "first n rows" fetch (``None``: all)
+        for ``_limited``, admitted against the byte/shard quotas first."""
+        self._admit(df)
+        return lambda n: [pick(r)
+                          for r in (df.limit(n) if n else df).collect()]
+
+    def _limited(self, first, limit: int, quota: int = 0):
+        """Fetch limit+1 rows; report truncation as a warning instead of
         silently clipping (reference search/materialize.go:53-58,
         db/db.go:339-347).  ``quota`` is the operator-set per-endpoint row
         ceiling (reference LabelNames/LabelValuesRowCountQuota): exceeding
         it is a 400 resource_exhausted, unlike the client ``limit`` which
-        truncates with a warning — and the quota probe pulls at most
+        truncates with a warning — and the quota probe fetches at most
         quota+1 rows, never the full result.  With NO quota and NO limit,
         ``default_metadata_row_quota`` backstops the otherwise-unbounded
-        collect (the reference's UnlimitedQuota default would OOM the
-        driver at scale; 0 restores it)."""
-        self._admit(df)
+        fetch (the reference's UnlimitedQuota default would OOM the
+        driver at scale; 0 restores it).  ``first(n)`` returns the first
+        n rows, all of them for ``None``: a scan (``_scan``) or a slice of
+        a label-index list, so both get the same 400s and warnings."""
         if not quota and not limit:
             quota = self.default_metadata_row_quota
         if quota:
-            rows = df.limit(quota + 1).collect()
+            rows = first(quota + 1)
             if len(rows) > quota:
                 raise QuotaExceeded(
                     f"resource exhausted (metadata result exceeds the "
                     f"{quota}-row quota)")
-            if limit and len(rows) > limit:
-                return rows[:limit], [WARN_TRUNCATED]
-            return rows, []
-        if not limit:
-            return df.collect(), []
-        rows = df.limit(limit + 1).collect()
-        if len(rows) > limit:
+        elif limit:
+            rows = first(limit + 1)
+        else:
+            return first(None), []
+        if limit and len(rows) > limit:
             return rows[:limit], [WARN_TRUNCATED]
         return rows, []
 
     def series(self, match: list[str], start_ms: int, end_ms: int,
                limit: int = 0) -> tuple[list[dict], list[str]]:
-        rows, warns = self._limited(
-            self.engine.series(match, start_ms, end_ms), limit,
-            quota=self.row_quota)
-        return [dict(r["labels"]) for r in rows], warns
+        return self._limited(
+            self._scan(self.engine.series(match, start_ms, end_ms),
+                       lambda r: dict(r["labels"])),
+            limit, quota=self.row_quota)
 
+    # matcher-free requests are answered from the engine's label index:
+    # no Spark job and nothing scanned, so no byte/shard admission either
     def labels(self, match: list[str] | None, start_ms: int, end_ms: int,
                limit: int = 0) -> tuple[list[str], list[str]]:
-        rows, warns = self._limited(
-            self.engine.label_names(match, start_ms, end_ms), limit,
-            quota=self.label_names_row_quota)
-        return [r["name"] for r in rows], warns
+        idx = self.engine.metadata_index(match)
+        first = (_head(idx.names(start_ms, end_ms)) if idx is not None else
+                 self._scan(self.engine.label_names(match, start_ms, end_ms),
+                            lambda r: r["name"]))
+        return self._limited(first, limit, quota=self.label_names_row_quota)
 
     def label_values(self, name: str, match: list[str] | None, start_ms: int,
                      end_ms: int, limit: int = 0) -> tuple[list[str], list[str]]:
-        rows, warns = self._limited(
-            self.engine.label_values(name, match, start_ms, end_ms), limit,
-            quota=self.label_values_row_quota)
-        return [r["value"] for r in rows], warns
+        idx = self.engine.metadata_index(match)
+        first = (_head(idx.values(name, start_ms, end_ms)) if idx is not None
+                 else self._scan(self.engine.label_values(name, match,
+                                                          start_ms, end_ms),
+                                 lambda r: r["value"]))
+        return self._limited(first, limit, quota=self.label_values_row_quota)
+
+
+def _head(items: list):
+    """A list as a "first n rows" fetch for ``QueryAPI._limited``."""
+    return lambda n: items[:n]
 
 
 class PromHTTPServer:

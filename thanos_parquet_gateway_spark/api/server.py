@@ -17,7 +17,10 @@ re-expresses) is the handler semantics:
   samples) with NO PromQL engine, no lookback, no staleness handling; the
   querier re-evaluates PromQL itself.  SkipChunks ≡ labels-only.
 - LabelNames / LabelValues (thanos.go:475-523): metadata with matchers and
-  per-request replica-label drop.
+  per-request replica-label drop.  Requests with neither are answered
+  from ``label_index`` (the label-stats snapshot ``serve`` loads once,
+  convert.read_label_stats) with no Spark job, day-block granular like
+  the reference's per-block dictionary reads; the rest scan.
 
 Quotas/warnings/stats ride on the same QueryAPI machinery as the HTTP path
 (api/http.py).
@@ -29,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from thanos_parquet_gateway_spark.api.http import WARN_TRUNCATED, QueryAPI
+from thanos_parquet_gateway_spark.convert.convert import LabelIndex
 from thanos_parquet_gateway_spark.promql.engine import PromQLEngine
 
 
@@ -43,7 +47,8 @@ class QueryServer:
                  shard_quota: int = 0,
                  label_names_row_quota: int = 0,
                  label_values_row_quota: int = 0,
-                 default_metadata_row_quota: int | None = None):
+                 default_metadata_row_quota: int | None = None,
+                 label_index: LabelIndex | None = None):
         self.samples = samples
         self.streams = streams
         self.ext_labels = ext_labels
@@ -56,6 +61,7 @@ class QueryServer:
         self.label_names_row_quota = label_names_row_quota
         self.label_values_row_quota = label_values_row_quota
         self.default_metadata_row_quota = default_metadata_row_quota
+        self.label_index = label_index
         # one (engine, api) per distinct (replica-label set, lookback),
         # built lazily — the reference builds a DBQueryable per request
         # (thanos.go:135-147) and threads the per-request LookbackDelta
@@ -88,7 +94,8 @@ class QueryServer:
                            deterministic=self.deterministic,
                            replica_labels=list(key[0]) or None,
                            ext_labels=self.ext_labels,
-                           streams=self.streams)
+                           streams=self.streams,
+                           label_index=self.label_index)
         api = QueryAPI(eng, self.max_concurrent,
                        row_quota=self.row_quota,
                        byte_quota=self.byte_quota,

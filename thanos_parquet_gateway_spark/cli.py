@@ -37,29 +37,28 @@ def cmd_serve(args) -> int:
 
     spark = get_spark("serve")
     samples = spark.read.parquet(args.path)
-    streams = label_stats = None
+    streams = label_index = None
     try:
         from thanos_parquet_gateway_spark.convert import read_stream_descriptors
         streams = read_stream_descriptors(spark, args.path)
     except Exception:  # noqa: BLE001 — flat layouts have no sidecar
         streams = None
-    if not args.replica_label:
-        # the sidecar carries raw labels; with replica dropping the served
-        # label set differs, so fall back to the scan path
-        try:
-            from thanos_parquet_gateway_spark.convert.convert import (
-                read_label_stats,
-            )
-            label_stats = read_label_stats(spark, args.path)
-        except Exception:  # noqa: BLE001 — pre-sidecar layouts
-            label_stats = None
+    from pyspark.errors import AnalysisException
+
+    from thanos_parquet_gateway_spark.convert.convert import read_label_stats
+    try:
+        # one snapshot for both transports, like the samples file listing
+        # above: a re-convert into the same path shows after a restart
+        label_index = read_label_stats(spark, args.path)
+    except AnalysisException:  # pre-sidecar layouts
+        label_index = None
+    ext_labels = _parse_label_map(args.external_label or []) or None
     eng = PromQLEngine(samples,
                        lookback_ms=args.lookback_ms,
                        replica_labels=args.replica_label or None,
-                       ext_labels=_parse_label_map(args.external_label or [])
-                       or None,
+                       ext_labels=ext_labels,
                        streams=streams,
-                       label_stats=label_stats)
+                       label_index=label_index)
     srv = PromHTTPServer(eng, port=args.port,
                          max_concurrent=args.max_concurrent,
                          row_quota=args.max_row_count,
@@ -73,17 +72,19 @@ def cmd_serve(args) -> int:
         )
         from thanos_parquet_gateway_spark.api.server import QueryServer
         qs = QueryServer(samples, streams=streams,
-                         ext_labels=_parse_label_map(
-                             args.external_label or []) or None,
+                         ext_labels=ext_labels,
                          lookback_ms=args.lookback_ms,
                          max_concurrent=args.max_concurrent,
                          row_quota=args.max_row_count,
                          byte_quota=args.max_chunk_bytes,
-                         shard_quota=args.max_shard_count)
+                         shard_quota=args.max_shard_count,
+                         label_index=label_index)
         gsrv = ThanosGrpcServer(qs, port=args.grpc_port).start()
     print(f"serving {args.path} on :{srv.port}"
           + (f" grpc :{gsrv.port}" if gsrv else "")
-          + f" (streams={sorted(streams) if streams else None})")
+          + f" (streams={sorted(streams) if streams else None}, "
+          + ("label_index=None)" if label_index is None
+             else f"label_index={label_index.rows} rows)"))
     srv.server.serve_forever()
     return 0
 

@@ -211,12 +211,13 @@ def convert_streams(raws: dict[str, DataFrame], out_path: str, *,
 
 def write_label_stats(spark, out_path: str) -> None:
     """Label-stats sidecar: distinct (stream, date, label, value) of the
-    written table — the Spark analogue of the reference's dictionary-
-    shortcut LabelValues (search/search.go:153-201 reads values straight
-    from parquet column dictionaries; SURVEY.md §7.3 maintains the same
-    shortcut as a convert-time stats table).  /labels and /label/:name/
-    values then touch only this sidecar, never the samples, and the date
-    column keeps time-range pruning."""
+    written table — the Spark analogue of the parquet column dictionaries
+    the reference answers matcher-free LabelNames/LabelValues from
+    (search/search.go:153-201, 294-301; SURVEY.md §7.3 maintains the same
+    shortcut as a convert-time stats table).  ``serve`` loads it once into
+    a driver-side ``LabelIndex`` (read_label_stats), so those requests
+    touch neither the samples nor Spark; the date column gives them
+    day-block time-range pruning."""
     written = spark.read.parquet(out_path)
     (written.select(F.col("stream").cast("string").alias("stream"),
                     F.date_format("date", "yyyy-MM-dd").alias("date"),
@@ -225,8 +226,61 @@ def write_label_stats(spark, out_path: str) -> None:
      .write.mode("overwrite").parquet(f"{out_path}/_label_stats"))
 
 
-def read_label_stats(spark, out_path: str) -> DataFrame:
-    return spark.read.parquet(f"{out_path}/_label_stats")
+# last millisecond of 9999-12-31, the largest day a datetime can name
+_MAX_DAY_MS = 253_402_300_799_999
+
+
+def _utc_day(ms: int) -> str:
+    """UTC day of an epoch-ms bound in the sidecar's ``date`` format,
+    clamped to the epoch .. 9999-12-31 (queriers send open ranges as
+    extreme bounds, e.g. Prometheus's MinTime/MaxTime)."""
+    import datetime as _dt
+    return _dt.datetime.fromtimestamp(
+        min(max(ms, 0), _MAX_DAY_MS) / 1000,
+        _dt.timezone.utc).strftime("%Y-%m-%d")
+
+
+class LabelIndex:
+    """Immutable driver-side snapshot of the ``_label_stats`` sidecar: per
+    UTC day, label name → sorted tuple of its non-empty values.  Answers
+    are the union over the days ``day(start)..day(end)`` — day-block
+    granular, like the reference's per-block dictionary reads — sorted by
+    code point, which is Spark's binary UTF-8 string order.  ``rows`` is
+    the sidecar row count (about one Python string each)."""
+
+    __slots__ = ("_by_day", "rows")
+
+    def __init__(self, by_day: dict[str, dict[str, tuple[str, ...]]],
+                 rows: int):
+        self._by_day, self.rows = by_day, rows
+
+    def _in_range(self, start_ms: int, end_ms: int) -> list[dict]:
+        lo, hi = _utc_day(start_ms), _utc_day(end_ms)
+        return [labels for d, labels in self._by_day.items()
+                if lo <= d <= hi]
+
+    def names(self, start_ms: int, end_ms: int) -> list[str]:
+        return sorted(set().union(*self._in_range(start_ms, end_ms)))
+
+    def values(self, name: str, start_ms: int, end_ms: int) -> list[str]:
+        return sorted(set().union(*(day.get(name, ())
+                                    for day in self._in_range(start_ms,
+                                                              end_ms))))
+
+
+def read_label_stats(spark, out_path: str) -> LabelIndex:
+    """Load the label-stats sidecar into a ``LabelIndex`` with one Arrow
+    collect; raises when the layout has no sidecar."""
+    t = (spark.read.parquet(f"{out_path}/_label_stats")
+         .select("date", "label", "value").toArrow())
+    acc: dict[str, dict[str, set]] = {}
+    for d, k, v in zip(*(t.column(c).to_pylist()
+                         for c in ("date", "label", "value"))):
+        vals = acc.setdefault(d, {}).setdefault(k, set())
+        if v:
+            vals.add(v)
+    return LabelIndex({d: {k: tuple(sorted(vs)) for k, vs in labels.items()}
+                       for d, labels in acc.items()}, t.num_rows)
 
 
 def write_stream_descriptors(spark, out_path: str,

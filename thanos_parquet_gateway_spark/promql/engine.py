@@ -13,6 +13,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from thanos_parquet_gateway_spark.convert.convert import LabelIndex
 from thanos_parquet_gateway_spark.promql import parser as P
 from thanos_parquet_gateway_spark.promql.compiler import Compiler
 from thanos_parquet_gateway_spark.promql.values import (
@@ -70,7 +71,7 @@ class PromQLEngine:
                  ext_labels: dict[str, str] | None = None,
                  streams: dict[str, dict[str, str]] | None = None,
                  complete_streams: bool = True,
-                 label_stats: DataFrame | None = None):
+                 label_index: LabelIndex | None = None):
         """``samples``: long-format samples table (schema.py).  ``replica_labels``
         are dropped and the data deduplicated by (series, ts) — the Spark
         equivalent of the reference's replica-label drop + hash dedup
@@ -78,7 +79,9 @@ class PromQLEngine:
         the ``stream`` partition-column value to that stream's external label
         set (multi-stream mode, reference locate/discover.go:125-305):
         matchers on stream labels prune stream partitions, results are
-        decorated per stream."""
+        decorated per stream.  ``label_index`` is the converted table's
+        label-stats snapshot (convert.read_label_stats); see
+        ``metadata_index``."""
         if "__name__" not in samples.columns:
             samples = samples.withColumn("__name__", label("labels", "__name__"))
         ext_rep = grp_of_stream = None
@@ -168,6 +171,7 @@ class PromQLEngine:
         self.lookback_ms = lookback_ms
         self.deterministic = deterministic
         self.subquery_step_ms = subquery_step_ms
+        self.replica_labels = replica_labels
         self.ext_labels = ext_labels
         self.streams = streams
         self.complete_streams = complete_streams
@@ -195,10 +199,10 @@ class PromQLEngine:
         # lock (driver-heavy — a concurrent builder of the same key just
         # loses the insert race, same policy as the server's engine LRU)
         self._plan_lock = _th.Lock()
-        # convert-time sidecar (convert.write_label_stats): the reference's
-        # dictionary-shortcut LabelValues analogue — unconstrained metadata
-        # queries read it instead of scanning samples
-        self.label_stats = label_stats
+        # convert-time label-stats snapshot, loaded once when serving
+        # starts: the reference's schema/dictionary shortcut for
+        # matcher-free LabelNames/LabelValues (search/search.go:153-201)
+        self.label_index = label_index
 
     # ------------------------------------------------------------- queries
     def _compile(self, q: str, start_ms: int, end_ms: int, step_ms: int):
@@ -340,36 +344,20 @@ class PromQLEngine:
                .orderBy("sig"))
         return out.limit(limit) if limit else out
 
-    def _stats_fast_path(self, match) -> DataFrame | None:
-        """The sidecar answers only unconstrained metadata queries (the
-        reference's dictionary shortcut is likewise matcher-free,
-        search/search.go:153-201); matchers, stream decoration, and
-        external labels fall back to the filtered scan."""
-        if match or self.streams or self.ext_labels or \
-                self.label_stats is None:
+    def metadata_index(self, match) -> LabelIndex | None:
+        """The label index when it answers a metadata request as the scan
+        would: no matchers (the reference's shortcut is likewise
+        matcher-free, search/search.go:153-201), and no stream decoration,
+        external labels or replica drop, which change the served label
+        set.  ``None`` means take the scan (label_names/label_values)."""
+        if match or self.streams or self.ext_labels or self.replica_labels:
             return None
-        return self.label_stats
-
-    def _stats_in_range(self, start_ms: int, end_ms: int) -> DataFrame:
-        import datetime as _dt
-
-        def day(ms):
-            return _dt.datetime.fromtimestamp(
-                max(ms, 0) / 1000, _dt.timezone.utc).strftime("%Y-%m-%d")
-
-        return self.label_stats.filter(
-            (F.col("date") >= day(start_ms)) & (F.col("date") <= day(end_ms)))
+        return self.label_index
 
     def label_names(self, match: list[str] | None, start_ms: int, end_ms: int,
                     limit: int = 0) -> DataFrame:
-        """Reference: schema-level when unconstrained, filtered scan otherwise
-        (search/search.go:294-345).  With a converted table's label-stats
-        sidecar the unconstrained case never touches the samples."""
-        if self._stats_fast_path(match) is not None:
-            out = (self._stats_in_range(start_ms, end_ms)
-                   .select(F.col("label").alias("name"))
-                   .distinct().orderBy("name"))
-            return out.limit(limit) if limit else out
+        """Label names as a filtered scan (reference search/search.go:
+        294-345); the schema-level shortcut is ``metadata_index``."""
         out = (self._matched(match or [], start_ms, end_ms)
                .select(F.explode(F.map_keys("labels")).alias("name"))
                .distinct().orderBy("name"))
@@ -377,16 +365,8 @@ class PromQLEngine:
 
     def label_values(self, name: str, match: list[str] | None,
                      start_ms: int, end_ms: int, limit: int = 0) -> DataFrame:
-        """Reference: dictionary shortcut without matchers, filtered distinct
-        with matchers (search/search.go:153-262).  The sidecar (when the
-        engine was built from a converted table) IS the dictionary: distinct
-        (label, value) per stream/day, no samples scan."""
-        if self._stats_fast_path(match) is not None:
-            out = (self._stats_in_range(start_ms, end_ms)
-                   .filter(F.col("label") == name)
-                   .select("value").filter(F.col("value") != "")
-                   .distinct().orderBy("value"))
-            return out.limit(limit) if limit else out
+        """Label values as a filtered distinct (reference search/search.go:
+        202-262); the dictionary shortcut is ``metadata_index``."""
         out = (self._matched(match or [], start_ms, end_ms)
                .select(label("labels", name).alias("value"))
                .filter(F.col("value") != "")
